@@ -10,6 +10,7 @@ per-page aggregation, partitioned by the page key.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,7 +25,10 @@ DEFAULT_ENTITY_NAMES = (
 
 def entity_dictionary(spark: SparkSession,
                       names=DEFAULT_ENTITY_NAMES) -> DataFrame:
-    rows = [(n, KB_PREFIX + n) for n in sorted(names)]
+    # From an Arrow table: a LocalRelation, which needs no Python task.
+    names = sorted(names)
+    rows = pa.table([names, [KB_PREFIX + n for n in names]],
+                    names=["name", "entity_iri"])
     return spark.createDataFrame(rows, "name string, entity_iri string")
 
 

@@ -8,18 +8,24 @@ of the extraction kernel:
 - the corpus is split into ``n_buckets`` url-hash buckets
   (``pmod(xxhash64(url), n_buckets)``) — the unit of checkpointing,
   deterministic at any parallelism;
-- each commit extracts a chunk of buckets in ONE distributed job and
-  writes ``triples/bucket=K/`` via **dynamic partition overwrite**, so a
-  re-run of a bucket whose job died mid-write replaces partial output
-  instead of duplicating it (idempotent restart);
+- each commit is ONE Spark job: filter the chunk's buckets,
+  hash-repartition on the bucket into ``min(buckets in chunk, cores)``
+  tasks, extract, and write ``triples/bucket=K/`` via **dynamic
+  partition overwrite**, so a re-run of a bucket whose job died
+  mid-write replaces partial output instead of duplicating it
+  (idempotent restart).  Nothing is cached and nothing is counted in a
+  job of its own: per-bucket page and triple counts are observed
+  (``DataFrame.observe``) in the write job's result stage;
 - only after a chunk's data is fully written is its lineage recorded in
   the ``_manifest`` table ``(run_id, bucket, n_pages, n_triples,
-  wall_sec)`` — write-ahead data, commit-behind metadata, exactly the
-  Iceberg snapshot-commit ordering (data files first, metadata pointer
-  last);
+  commit_wall_sec, committed_at)``, written from a driver-local frame —
+  write-ahead data, commit-behind metadata, exactly the Iceberg
+  snapshot-commit ordering (data files first, metadata pointer last);
 - ``run()`` anti-joins the manifest, so a restarted job processes only
   buckets without a committed manifest row.
 
+``commit_chunk`` is the per-commit step, shared with
+``sources/warc.WarcIngestion`` (whose checkpoint unit is the shard).
 On a real cluster the parquet dirs become Iceberg tables and the
 manifest a snapshot log; the control flow is identical.
 """
@@ -28,7 +34,8 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType, DoubleType)
@@ -43,6 +50,49 @@ MANIFEST_SCHEMA = StructType([
     StructField("commit_wall_sec", DoubleType()),  # whole chunk's wall
     StructField("committed_at", DoubleType()),     # epoch sec of commit
 ])
+
+
+def commit_chunk(chunk_pages: DataFrame, key: str, units: list,
+                 triples_dir: str, manifest_dir: str,
+                 manifest_schema: StructType, run_id: str,
+                 **extract_kw) -> None:
+    """Commit one chunk of checkpoint units: write its triples, then
+    append one manifest row per unit (``key`` value in ``units``).
+
+    The data write is the only action over the pages.  ``n_pages``
+    and ``n_triples`` per unit are observed on ``chunk_pages`` and on
+    the extracted triples inside that job's result stage, where a
+    retried task's metrics count once.  Pages that yield zero triples,
+    kernel-rejected ones included, still count in ``n_pages`` (it reads
+    as "work done").  ``extract_kw`` goes to ``extract_triples``.
+    """
+    t0 = time.time()
+
+    def observed(df: DataFrame, obs: Observation) -> DataFrame:
+        return df.observe(obs, *(
+            F.count_if(F.col(key) == F.lit(u)).alias(f"u{i}")
+            for i, u in enumerate(units)))
+
+    pages_obs, triples_obs = Observation(), Observation()
+    triples = extract_triples(observed(chunk_pages, pages_obs),
+                              passthrough=(key,), **extract_kw)
+    # Data first: dynamic overwrite replaces any partial output of a
+    # previously-failed attempt at these units.
+    (observed(triples, triples_obs).write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(key)
+     .parquet(triples_dir))
+    n_pages, n_triples = pages_obs.get, triples_obs.get
+    # Metadata last: the manifest row IS the commit point.  An Arrow
+    # table becomes a LocalRelation, so this write runs no Python task.
+    n = len(units)
+    cols = [[run_id] * n, units,
+            [n_pages[f"u{i}"] for i in range(n)],
+            [n_triples[f"u{i}"] for i in range(n)],
+            [round(time.time() - t0, 3)] * n, [time.time()] * n]
+    rows = pa.table(cols, names=manifest_schema.names)
+    (chunk_pages.sparkSession.createDataFrame(rows, manifest_schema)
+     .coalesce(1).write.mode("append").parquet(manifest_dir))
 
 
 def url_bucket(n_buckets: int, url_col: str = "url") -> F.Column:
@@ -119,50 +169,17 @@ class CheckpointedExtraction:
             if stop_after_commits is not None and commits >= stop_after_commits:
                 break
             chunk = remaining[i:i + buckets_per_commit]
-            t0 = time.time()
             # Repartition BEFORE extraction, hashed on bucket: extraction
             # parallelism must not be hostage to the input's file-split
-            # count, and bucket-aligned tasks write exactly one file per
-            # bucket=K/ dir.  Parallelism == buckets per chunk; size
-            # n_buckets ≥ cluster cores (at 10^12 pages it is ≫).
+            # count, and a bucket lands wholly in one task, so each
+            # bucket=K/ dir gets exactly one file.  Tasks per commit ==
+            # min(buckets in chunk, cores): every Python task carries a
+            # fixed cost, so more tasks than cores only adds it.
+            n_tasks = min(len(chunk), spark.sparkContext.defaultParallelism)
             chunk_pages = (bucketed.filter(F.col("bucket").isin(chunk))
-                           .repartition(len(chunk), "bucket"))
-            triples = extract_triples(
-                chunk_pages, passthrough=("bucket",)).cache()
-            # Page counts come from the INPUT chunk, not the extracted
-            # triples: a page that parses to zero triples was still
-            # processed and must be counted (quarantine/monitoring
-            # reads n_pages as "work done", not "pages with output").
-            page_counts = {r.bucket: r.n_pages for r in
-                           (chunk_pages.groupBy("bucket")
-                            .agg(F.count(F.lit(1)).alias("n_pages"))
-                            .collect())}
-            # Triple stats from the cached chunk itself — a read-back of
-            # the output dir would fail on an all-empty first commit (no
-            # parquet files yet to infer a schema from).
-            stats = {r.bucket: (page_counts.get(r.bucket, 0), r.n_triples)
-                     for r in (triples.groupBy("bucket")
-                               .agg(F.count(F.lit(1)).alias("n_triples"))
-                               .collect())}
-            for b, np_ in page_counts.items():
-                stats.setdefault(b, (np_, 0))
-            # Data first: dynamic overwrite replaces any partial output of
-            # a previously-failed attempt at these buckets.  No second
-            # shuffle: tasks already hold (bucket, url) co-partitioned
-            # triples; partitionBy groups them into bucket=K/ dirs.
-            (triples.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket")
-             .parquet(self.triples_dir))
-            triples.unpersist()
-            # Metadata last: the manifest row IS the commit point.
-            wall = time.time() - t0
-            rows = [(run_id, int(b), int(stats.get(b, (0, 0))[0]),
-                     int(stats.get(b, (0, 0))[1]), round(wall, 3),
-                     time.time())
-                    for b in chunk]
-            (spark.createDataFrame(rows, MANIFEST_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.manifest_dir))
+                           .repartition(n_tasks, "bucket"))
+            commit_chunk(chunk_pages, "bucket", chunk, self.triples_dir,
+                         self.manifest_dir, MANIFEST_SCHEMA, run_id)
             commits += 1
             processed.extend(chunk)
 

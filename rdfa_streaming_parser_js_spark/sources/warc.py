@@ -311,7 +311,7 @@ class WarcIngestion:
         """Ingest every shard not yet in the manifest; returns counters
         for this invocation.  ``stop_after_commits`` simulates a
         mid-job crash for restart tests."""
-        from ..operators.extract import extract_triples
+        from ..plans.lineage import commit_chunk
         run_id = run_id or f"warc-{int(time.time() * 1000):x}"
         done = self.completed_shards(spark)
         remaining = [p for p in self.list_shards(spark)
@@ -323,38 +323,13 @@ class WarcIngestion:
                     and commits >= stop_after_commits:
                 break
             chunk = remaining[i:i + shards_per_commit]
-            t0 = time.time()
-            # Cache pages for the chunk: page_counts and the triples
-            # materialization below would otherwise each re-read and
-            # re-parse every WARC shard (decompress + record framing
-            # twice per commit).  Chunk-sized, released before the next
-            # chunk.
-            pages = read_warc_pages(spark, chunk, with_shard=True).cache()
-            triples = extract_triples(pages, lang_col=None,
-                                      passthrough=("shard",)).cache()
-            page_counts = {r.shard: r.n_pages for r in
-                           (pages.groupBy("shard")
-                            .agg(F.count(F.lit(1)).alias("n_pages"))
-                            .collect())}
-            stats = {r.shard: r.n_triples for r in
-                     (triples.groupBy("shard")
-                      .agg(F.count(F.lit(1)).alias("n_triples"))
-                      .collect())}
-            # data first (idempotent via dynamic partition overwrite) ...
-            (triples.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("shard")
-             .parquet(self.triples_dir))
-            triples.unpersist()
-            pages.unpersist()
-            # ... manifest last: the commit point
-            wall = time.time() - t0
+            # No repartition: a shard is one binaryFile row, so its pages
+            # already sit in one task and shard=<file>/ gets one file.
             names = [os.path.basename(p) for p in chunk]
-            rows = [(run_id, s, int(page_counts.get(s, 0)),
-                     int(stats.get(s, 0)), round(wall, 3), time.time())
-                    for s in names]
-            (spark.createDataFrame(rows, WARC_MANIFEST_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.manifest_dir))
+            commit_chunk(read_warc_pages(spark, chunk, with_shard=True),
+                         "shard", names, self.triples_dir,
+                         self.manifest_dir, WARC_MANIFEST_SCHEMA, run_id,
+                         lang_col=None)
             commits += 1
             processed.extend(names)
 

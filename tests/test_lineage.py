@@ -4,6 +4,8 @@ identical triple counts, skipping committed partitions."""
 
 from __future__ import annotations
 
+import glob
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -12,11 +14,23 @@ from rdfa_streaming_parser_js_spark.plans.explain import (
     assert_map_only, count_exchanges, has_broadcast_join,
     has_pushed_filter, plan_string, scan_read_schema)
 from rdfa_streaming_parser_js_spark.plans.lineage import (
-    CheckpointedExtraction)
+    CheckpointedExtraction, url_bucket)
 from rdfa_streaming_parser_js_spark.sources.pages import pages_from_documents
 
 SF_DIR = "/root/testdata/sf0.001"
 N_BUCKETS = 8
+
+# A page with no RDFa (zero triples) and one the kernel rejects
+# (mutually-cyclic rdfa:copy patterns exhaust the replay stack).
+NO_RDFA = b"<html><body><p>plain text, no markup</p></body></html>"
+CYCLIC = (b'<html><body prefix="schema: http://schema.org/">'
+          b'<div resource="#a" typeof="rdfa:Pattern">'
+          b'<link property="rdfa:copy" href="#b"/></div>'
+          b'<div resource="#b" typeof="rdfa:Pattern">'
+          b'<link property="rdfa:copy" href="#a"/></div>'
+          b'<div typeof="schema:Person">'
+          b'<link property="rdfa:copy" href="#a"/></div>'
+          b'</body></html>')
 
 
 @pytest.fixture(scope="module")
@@ -72,6 +86,72 @@ def test_rerun_is_noop_and_reprocess_is_idempotent(spark, pages, tmp_path):
     ck2 = CheckpointedExtraction(ck.out_dir, n_buckets=4)
     ck2.run(pages, buckets_per_commit=4, run_id="c")
     assert ck2.triples(spark).count() == total
+
+
+def _per_bucket(df):
+    return {r.bucket: r.n for r in
+            df.groupBy(url_bucket(N_BUCKETS).alias("bucket"))
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+
+
+def _manifest_counts(ck, spark):
+    return {r.bucket: (r.n_pages, r.n_triples)
+            for r in ck.manifest(spark).collect()}
+
+
+def test_manifest_counts_are_per_bucket(spark, pages, tmp_path):
+    """Each bucket's manifest row matches an independent groupBy over the
+    pages and over extract_triples; a zero-triple page and a
+    kernel-rejected page count as pages and add no triples; and each
+    bucket dir holds exactly one data file."""
+    odd = spark.createDataFrame(
+        [("http://e.org/no-rdfa", bytearray(NO_RDFA), None),
+         ("http://e.org/cyclic", bytearray(CYCLIC), None)],
+        "url string, html binary, lang string")
+    base = pages.select("url", "html", "lang")
+    ck = CheckpointedExtraction(str(tmp_path / "kg"), n_buckets=N_BUCKETS)
+    ck.run(base.unionByName(odd), buckets_per_commit=3, run_id="a")
+
+    n_pages, n_triples = _per_bucket(base), _per_bucket(extract_triples(base))
+    n_odd = _per_bucket(odd)
+    assert _manifest_counts(ck, spark) == {
+        b: (n_pages.get(b, 0) + n_odd.get(b, 0), n_triples.get(b, 0))
+        for b in range(N_BUCKETS)}
+    for b in range(N_BUCKETS):
+        files = glob.glob(f"{ck.triples_dir}/bucket={b}/*.parquet")
+        assert len(files) == 1, (b, files)
+
+
+def _persisted_ids(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return frozenset(int(k) for k in jmap.keySet().toArray())
+
+
+def test_run_is_one_job_per_commit_and_caches_nothing(spark, tmp_path):
+    """A commit runs the data write (a shuffle-map and a result job under
+    AQE) and the manifest write, with no count jobs and no cache left
+    behind; a crashed-then-restarted run commits the same manifest
+    counts as a single-shot run."""
+    corpus = pages_from_documents(spark, SF_DIR)
+    sc = spark.sparkContext
+    before = _persisted_ids(spark)
+    one = CheckpointedExtraction(str(tmp_path / "one"), n_buckets=N_BUCKETS)
+    sc.setJobGroup("lineage-run", "single-shot checkpointed run")
+    try:
+        r = one.run(corpus, buckets_per_commit=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["commits"] == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("lineage-run")
+    # +1: the manifest lookup before the first commit
+    assert len(jobs) <= 3 * r["commits"] + 1, jobs
+    assert not _persisted_ids(spark) - before
+
+    two = CheckpointedExtraction(str(tmp_path / "two"), n_buckets=N_BUCKETS)
+    two.run(corpus, buckets_per_commit=3, stop_after_commits=1)
+    assert len(_manifest_counts(two, spark)) == 3
+    two.run(corpus, buckets_per_commit=3)
+    assert _manifest_counts(two, spark) == _manifest_counts(one, spark)
 
 
 def test_extraction_plan_is_map_only(spark, pages):

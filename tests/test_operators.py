@@ -277,7 +277,8 @@ def test_lineage_empty_corpus(spark, tmp_path):
     assert ck.completed_buckets(spark) == {0, 1, 2, 3}
     assert ck.triples(spark).count() == 0
     m = ck.metrics(spark).collect()
-    assert all(row.n_triples == 0 for row in m) and len(m) == 4
+    assert len(m) == 4
+    assert all(row.n_pages == 0 and row.n_triples == 0 for row in m)
 
 
 def test_ntriples_escaping(spark):
